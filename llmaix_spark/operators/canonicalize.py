@@ -7,23 +7,45 @@ single-machine notion of "first". The distributed recast picks the
 lexicographically *smallest* normalized surface per component: a total
 order every executor agrees on with zero coordination.
 
-Algorithm: iterative min-label propagation over undirected edges —
-    label(x) ← min(label(x), min_{(x,y)∈E} label(y))
-until a round changes nothing. Each round is one join + one
-map-side-combinable groupBy.min; `localCheckpoint()` truncates the plan
-lineage every round (SURVEY §4.2 rule 3 — an un-checkpointed iterative
-self-join grows the plan exponentially and dies at scale). Hot-entity
-skew: min-aggregation does partial combine on the map side, and the
-label join runs under AQE skew-join; an explicit salt is unnecessary
-*here* because the reduce is an algebraic min — the salted two-phase
-pattern lives in `salted_count` (used for mention frequencies, where the
-skewed key reaches a non-combinable sink).
+`connected_components` takes the cheapest path that fits, each bounded by
+`driver_threshold` edges on the driver:
+
+1. Arrow probe. One action fetches at most threshold+1 edges with
+   `toArrow()` (no per-row pickling). If they fit, a driver union-find
+   finishes: the graph of fuzzy-linked *distinct* surfaces is usually
+   orders of magnitude smaller than the corpus.
+2. Hook contraction. On overflow, one distributed round of min-neighbour
+   hooking (Kiveris et al., *Connected Components in MapReduce and
+   Beyond*, SoCC 2014), in built-in Spark SQL:
+       hook(u) = least(u, min_{(u,v)∈E} v)
+       E' = {(v, hook(u)) : (u,v) ∈ E} ∪ {(u, hook(u)) : u ∈ V}
+   with self-loops dropped, pairs ordered and deduplicated. E' has the
+   same nodes and components as E, but a clique of k name variants — the
+   skewed-token regime where every 1-char variant matches every other —
+   shrinks from k(k-1)/2 edges to at most k-1. E' is probed with the same
+   limit and, if it fits, finished by the driver union-find.
+3. Label propagation, only if E' still overflows: iterative min-label
+   propagation over undirected edges —
+       label(x) ← min(label(x), min_{(x,y)∈E'} label(y))
+   plus pointer doubling, until a round changes nothing. Each round is one
+   salted join + one map-side-combinable groupBy.min; `localCheckpoint()`
+   truncates the plan lineage every round (SURVEY §4.2 rule 3 — an
+   un-checkpointed iterative self-join grows the plan exponentially and
+   dies at scale). Not converging within `max_iterations` is an error.
+
+Each call logs the path it took on the `llmaix_spark.operators.canonicalize`
+logger at INFO.
 """
 
 from __future__ import annotations
 
+import logging
+
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 
 def salted_count(
@@ -46,15 +68,23 @@ def salted_count(
     return phase1.groupBy(key).agg(F.sum("_partial").alias("n"))
 
 
-def _driver_cc_from_rows(spark, rows) -> DataFrame:
-    """Small-graph fast path: union-find on the driver.
+def _probe(edges: DataFrame, limit: int):
+    """At most `limit`+1 edges as an Arrow table — one action; more than
+    `limit` rows means the graph overflows the driver."""
+    return edges.select("norm_a", "norm_b").limit(limit + 1).toArrow()
+
+
+def _driver_cc(spark, edges) -> DataFrame:
+    """Union-find on the driver over an Arrow table of edges.
 
     The iterative DataFrame CC costs ~10 scheduler round-trips regardless
     of data size — pure serial overhead (Amdahl) when the match graph is
-    tiny relative to the corpus, which is the common case (distinct
-    fuzzy-linked surface pairs ≪ mentions). Below the threshold we
-    collect the edge list (two strings per row), union-find in
-    microseconds, and parallelize the assignment back."""
+    small. Union by smaller root keeps every root the minimum of its set,
+    so `find` returns the component's min label directly. The result goes
+    back through Arrow, broadcast-hinted: the hint travels with the
+    returned plan, so a ≤threshold-row table joined against the (huge)
+    mention table is map-side. (isLocal() is False for createDataFrame
+    output, so hinting at the caller based on it never fired.)"""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -64,14 +94,52 @@ def _driver_cc_from_rows(spark, rows) -> DataFrame:
             x = parent[x]
         return x
 
-    for r in rows:
-        ra, rb = find(r[0]), find(r[1])
+    for a, b in zip(edges.column(0).to_pylist(), edges.column(1).to_pylist()):
+        ra, rb = find(a), find(b)
         if ra != rb:
             lo, hi = sorted((ra, rb))
             parent[hi] = lo
-    out = [(n, find(n)) for n in list(parent)]
-    return spark.createDataFrame(
-        out or [], "norm string, component string"
+    nodes = list(parent)
+    out = pd.DataFrame(
+        {"norm": nodes, "component": [find(n) for n in nodes]}, dtype=object
+    )
+    return F.broadcast(
+        spark.createDataFrame(out, "norm string, component string")
+    )
+
+
+def _hook_contract(edges: DataFrame) -> DataFrame:
+    """One min-neighbour hooking round: edges(norm_a, norm_b) → edges with
+    the same node set and components, and far fewer edges on dense
+    clusters. A node whose only edges are self-loops keeps one (u, u) row
+    so it stays in the node set."""
+    sym = edges.select(
+        F.col("norm_a").alias("u"), F.col("norm_b").alias("v")
+    ).union(
+        edges.select(F.col("norm_b").alias("u"), F.col("norm_a").alias("v"))
+    )
+    # least() skips nulls: a node with only self-loops hooks to itself
+    nbr = F.min(F.when(F.col("v") != F.col("u"), F.col("v")))
+    hooks = sym.groupBy("u").agg(
+        F.least(F.col("u"), nbr).alias("h"), nbr.isNull().alias("lone")
+    )
+    pairs = (
+        sym.where(F.col("u") != F.col("v"))
+        .join(hooks, "u")
+        .select(F.col("v").alias("x"), "h", F.lit(False).alias("lone"))
+        .union(hooks.select(F.col("u").alias("x"), "h", "lone"))
+        .where((F.col("x") != F.col("h")) | F.col("lone"))
+    )
+    return pairs.select(
+        F.least("x", "h").alias("norm_a"), F.greatest("x", "h").alias("norm_b")
+    ).distinct()
+
+
+def _log_path(path, raw_overflow, contracted_edges, iterations, converged):
+    log.info(
+        "connected_components path=%s raw_overflow=%s contracted_edges=%s "
+        "iterations=%d converged=%s",
+        path, raw_overflow, contracted_edges, iterations, converged,
     )
 
 
@@ -88,24 +156,47 @@ def connected_components(
     caller joining assignments back with a coalesce, or by unioning
     isolated nodes in — `canonical_assignments` does the latter).
 
-    Size-adaptive: edge sets under `driver_threshold` take a driver-side
-    union-find (ONE action: collect limit threshold+1, fall back if it
-    overflows — the graph of *fuzzy-linked distinct surfaces* is orders
-    of magnitude smaller than the corpus); larger graphs run the
-    distributed min-label-propagation loop below.
+    Size-adaptive (module docstring): at most `driver_threshold` edges
+    ever reach the driver. An Arrow probe of the raw edges; if it
+    overflows, one hook-contraction round and a probe of the contracted
+    edges; driver union-find on whichever probe fits. Only when both
+    overflow does the distributed label-propagation loop run, on the
+    contracted edges. `driver_threshold=0` skips the probes and runs the
+    loop on the raw edges. Raises RuntimeError if the loop has not
+    converged after `max_iterations` rounds.
     """
+    spark = edges.sparkSession
+    raw_overflow = contracted_edges = None
     if driver_threshold:
-        head = (
-            edges.select("norm_a", "norm_b")
-            .limit(driver_threshold + 1)
-            .collect()
+        head = _probe(edges, driver_threshold)
+        raw_overflow = head.num_rows > driver_threshold
+        if not raw_overflow:
+            _log_path("driver", raw_overflow, None, 0, True)
+            return _driver_cc(spark, head)
+        edges = _hook_contract(edges)
+        head = _probe(edges, driver_threshold)
+        if head.num_rows <= driver_threshold:
+            _log_path("contracted", raw_overflow, head.num_rows, 0, True)
+            return _driver_cc(spark, head)
+        contracted_edges = f">{driver_threshold}"
+    labels, iterations, converged = _label_propagation(
+        edges, max_iterations, checkpoint_every
+    )
+    _log_path("loop", raw_overflow, contracted_edges, iterations, converged)
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge within max_iterations="
+            f"{max_iterations} rounds; components would be split — raise "
+            "max_iterations"
         )
-        if len(head) <= driver_threshold:
-            # the hint travels with the returned plan: a ≤200k-row table
-            # joined against the (huge) mention table must be map-side.
-            # (isLocal() is False for createDataFrame output, so hinting
-            # at the caller based on it never fired.)
-            return F.broadcast(_driver_cc_from_rows(edges.sparkSession, head))
+    return labels
+
+
+def _label_propagation(
+    edges: DataFrame, max_iterations: int, checkpoint_every: int
+) -> tuple[DataFrame, int, bool]:
+    """Distributed min-label propagation with pointer doubling →
+    (labels(norm, component), rounds run, converged)."""
     sym = edges.select(
         F.col("norm_a").alias("src"), F.col("norm_b").alias("dst")
     ).union(
@@ -135,8 +226,8 @@ def connected_components(
         F.sequence(F.lit(0), F.lit(k - 1))
     ).alias("salt")
 
-    changed = 0
-    for i in range(max_iterations):
+    changed = rounds = 0
+    for rounds in range(1, max_iterations + 1):
         replicated = labels.select(
             F.col("norm").alias("src"), "component", salts
         )
@@ -170,22 +261,13 @@ def connected_components(
                 "_changed"
             ),
         )
-        if (i + 1) % checkpoint_every == 0:
+        if rounds % checkpoint_every == 0:
             updated = updated.localCheckpoint()
         changed = updated.filter("_changed").limit(1).count()
         labels = updated.drop("_changed")
         if changed == 0:
             break
-    if changed != 0:
-        import warnings
-
-        warnings.warn(
-            f"connected_components did not converge within {max_iterations} "
-            "iterations — components may be split; raise max_iterations",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    return labels
+    return labels, rounds, changed == 0
 
 
 def canonical_assignments(

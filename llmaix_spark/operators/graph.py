@@ -86,66 +86,74 @@ def _pagerank_loop(
     state_dp: int,
     out_dp: int,
 ) -> DataFrame:
-    e = e0.repartition(parts, "src").persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
+    # every persisted frame is released in the finally, also when an
+    # action inside the loop raises (leaked executor cache degrades all
+    # later work on the session)
+    held: list[DataFrame] = []
 
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # co-partitioned with e on src; tiny relative to e — persist with it
-    e_deg = e.join(outdeg, "src").persist()
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
 
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    prev = None
-    for _ in range(iterations):
-        contrib = (
-            e_deg.join(ranks, e_deg["src"] == ranks["node"])
-            .select(F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
+    try:
+        e = hold(e0.repartition(parts, "src"))
+        nodes = hold(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        dangling = (
-            ranks.join(outdeg, ranks["node"] == outdeg["src"], "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
-        )
-        new_ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                F.round(
-                    (1.0 - damping) / n
-                    + damping
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                       + F.col("dm") / n),
-                    state_dp,
-                ).alias("rank"),
+        n = nodes.count()
+
+        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
+        # co-partitioned with e on src; tiny relative to e — persist with it
+        e_deg = hold(e.join(outdeg, "src"))
+
+        ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+        prev = None
+        for _ in range(iterations):
+            contrib = (
+                e_deg.join(ranks, e_deg["src"] == ranks["node"])
+                .select(
+                    F.col("dst"), (F.col("rank") / F.col("outdeg")).alias("c")
+                )
+                .groupBy("dst")
+                .agg(F.sum("c").alias("contrib"))
             )
-            .persist()
-        )
-        new_ranks.count()  # materialize BEFORE dropping the old state
-        if prev is not None:
-            prev.unpersist()
-        prev = ranks = new_ranks
+            dangling = (
+                ranks.join(outdeg, ranks["node"] == outdeg["src"], "left_anti")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm"))
+            )
+            new_ranks = hold(
+                nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "node",
+                    F.round(
+                        (1.0 - damping) / n
+                        + damping
+                        * (F.coalesce(F.col("contrib"), F.lit(0.0))
+                           + F.col("dm") / n),
+                        state_dp,
+                    ).alias("rank"),
+                )
+            )
+            new_ranks.count()  # materialize BEFORE dropping the old state
+            if prev is not None:
+                held.remove(prev)
+                prev.unpersist()
+            prev = ranks = new_ranks
 
-    out = ranks.select(
-        F.col("node").alias("entity_id"),
-        F.round("rank", out_dp).alias("pagerank"),
-    )
-    # the output is tiny (one row per entity); localCheckpoint cuts the
-    # iterative lineage so downstream consumers never re-run the loop,
-    # then every intermediate can be dropped
-    out = out.localCheckpoint(eager=True)
-    if prev is not None:
-        prev.unpersist()
-    e_deg.unpersist()
-    e.unpersist()
-    nodes.unpersist()
-    return out
+        out = ranks.select(
+            F.col("node").alias("entity_id"),
+            F.round("rank", out_dp).alias("pagerank"),
+        )
+        # the output is tiny (one row per entity); localCheckpoint cuts the
+        # iterative lineage so downstream consumers never re-run the loop,
+        # then every intermediate can be dropped
+        return out.localCheckpoint(eager=True)
+    finally:
+        for df in held:
+            df.unpersist()
 
 
 def triangle_counts(
@@ -511,6 +519,7 @@ def bfs_distances(
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     parts = max(1, min(int(old_sp), m // 100_000 + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    sym = None
     try:
         sym = sym0.repartition(parts, "a").persist()
         visited = spark.createDataFrame(
@@ -531,10 +540,11 @@ def bfs_distances(
             if frontier.isEmpty():
                 break
             visited = visited.union(frontier).localCheckpoint(eager=True)
-        sym.unpersist()
         return visited
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        if sym is not None:
+            sym.unpersist()
         sym0.unpersist()
 
 

@@ -8,7 +8,9 @@ canonicalization are wide, per the north rule):
     ─ mapInPandas extraction (narrow)
     ─ from_json + explode → triples_raw (narrow)
     ─ mention distinct + MinHash-LSH (▲ linking)
-    ─ iterative CC (▲ canonicalization, localCheckpoint per round)
+    ─ CC (▲ canonicalization): Arrow probe → driver union-find; on
+      overflow one hook-contraction round first; label-propagation
+      loop (localCheckpoint per round) only if that still overflows
     ─ assignments join back to triples (▲ broadcast when small / AQE)
     ─ write nodes/edges + lineage (narrow)
 
@@ -94,7 +96,7 @@ def run_pipeline_from_triples(
         # Resume short-circuit: when BOTH final stages are already
         # materialized, return them without building the compute DAG at
         # all. Without this, constructing `assignments` eagerly runs the
-        # whole linking DAG (connected_components' bounded collect is an
+        # whole linking DAG (connected_components' bounded Arrow probe is an
         # action) even though no downstream consumer needs it — a resumed
         # read paid ~2.5 s of recompute per invocation at sf0.1. The
         # intermediate entries are None on this path (final-only mode

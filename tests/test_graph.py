@@ -1,4 +1,7 @@
-"""Graph analytics: triangle counting."""
+"""Graph analytics: triangle counting, and cache release when a pagerank or
+BFS loop fails."""
+
+import pytest
 
 from llmaix_spark.operators.graph import triangle_counts, two_hop_counts
 
@@ -127,3 +130,77 @@ def test_common_neighbor_scores_excludes_adjacent(spark):
         "subj_id string, obj_id string",
     )
     assert common_neighbor_scores(edges).count() == 0
+
+
+def _fail_on_call(monkeypatch, cls, method, n):
+    """Make the n-th call of ``cls.method`` raise (an injected mid-loop
+    failure); earlier calls run normally."""
+    real = getattr(cls, method)
+    calls = []
+
+    def patched(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == n:
+            raise RuntimeError("injected failure")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, method, patched)
+
+
+def _record_persists(monkeypatch, cls):
+    persisted = []
+    real = cls.persist
+
+    def patched(self, *args, **kwargs):
+        persisted.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", patched)
+    return persisted
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_pagerank_failure_mid_loop_releases_cache(spark, monkeypatch):
+    """An action failing in the second iteration must leave no persisted
+    frame behind: every RDD the call persisted is gone afterwards (ids
+    compared, since other tests' leftovers may be cleaned meanwhile)."""
+    from pyspark import StorageLevel
+
+    from llmaix_spark.operators.graph import pagerank
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")],
+        "subj_id string, obj_id string",
+    )
+    cls = type(edges)
+    before = _persistent_rdd_ids(spark)
+    persisted = _record_persists(monkeypatch, cls)
+    # counts: edge total, node total, iteration 1 ranks, iteration 2 ranks
+    _fail_on_call(monkeypatch, cls, "count", 4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        pagerank(edges, iterations=3)
+    monkeypatch.undo()
+    assert len(persisted) >= 5  # e0, e, nodes, e_deg, ranks
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_bfs_failure_mid_loop_releases_cache(spark, monkeypatch):
+    from pyspark import StorageLevel
+
+    from llmaix_spark.operators.graph import bfs_distances
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
+    )
+    cls = type(edges)
+    persisted = _record_persists(monkeypatch, cls)
+    _fail_on_call(monkeypatch, cls, "isEmpty", 2)  # the second hop
+    with pytest.raises(RuntimeError, match="injected failure"):
+        bfs_distances(edges, max_hops=3)
+    monkeypatch.undo()
+    assert len(persisted) == 2  # sym0, sym
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
