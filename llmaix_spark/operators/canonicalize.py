@@ -25,8 +25,10 @@ order every executor agrees on with zero coordination.
    shrinks from k(k-1)/2 edges to at most k-1. E' is probed with the same
    limit and, if it fits, finished by the driver union-find.
 3. Label propagation, only if E' still overflows: iterative min-label
-   propagation over undirected edges —
-       label(x) ← min(label(x), min_{(x,y)∈E'} label(y))
+   propagation over undirected edges, on E' or E, whichever has fewer
+   rows (hooking does not shrink sparse graphs: a chain of k edges
+   becomes about 2k) —
+       label(x) ← min(label(x), min_{(x,y)∈E} label(y))
    plus pointer doubling, until a round changes nothing. Each round is one
    salted join + one map-side-combinable groupBy.min; `localCheckpoint()`
    truncates the plan lineage every round (SURVEY §4.2 rule 3 — an
@@ -135,11 +137,15 @@ def _hook_contract(edges: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def _log_path(path, raw_overflow, contracted_edges, iterations, converged):
+def _log_path(
+    path, raw_overflow, contracted_edges, iterations, converged,
+    loop_edges=None,
+):
     log.info(
         "connected_components path=%s raw_overflow=%s contracted_edges=%s "
-        "iterations=%d converged=%s",
+        "iterations=%d converged=%s loop_edges=%s",
         path, raw_overflow, contracted_edges, iterations, converged,
+        loop_edges,
     )
 
 
@@ -160,29 +166,39 @@ def connected_components(
     ever reach the driver. An Arrow probe of the raw edges; if it
     overflows, one hook-contraction round and a probe of the contracted
     edges; driver union-find on whichever probe fits. Only when both
-    overflow does the distributed label-propagation loop run, on the
-    contracted edges. `driver_threshold=0` skips the probes and runs the
+    overflow does the distributed label-propagation loop run, on whichever
+    of the raw and contracted edges has fewer rows (logged as
+    `loop_edges`). `driver_threshold=0` skips the probes and runs the
     loop on the raw edges. Raises RuntimeError if the loop has not
     converged after `max_iterations` rounds.
     """
     spark = edges.sparkSession
-    raw_overflow = contracted_edges = None
+    raw_overflow = contracted_edges = loop_edges = None
     if driver_threshold:
         head = _probe(edges, driver_threshold)
         raw_overflow = head.num_rows > driver_threshold
         if not raw_overflow:
             _log_path("driver", raw_overflow, None, 0, True)
             return _driver_cc(spark, head)
-        edges = _hook_contract(edges)
-        head = _probe(edges, driver_threshold)
+        contracted = _hook_contract(edges)
+        head = _probe(contracted, driver_threshold)
         if head.num_rows <= driver_threshold:
             _log_path("contracted", raw_overflow, head.num_rows, 0, True)
             return _driver_cc(spark, head)
         contracted_edges = f">{driver_threshold}"
+        # contraction can grow a sparse graph (a chain of k edges becomes
+        # about 2k): loop on whichever edge set is smaller
+        n_raw, n_contracted = edges.count(), contracted.count()
+        if n_contracted < n_raw:
+            edges = contracted
+        loop_edges = min(n_raw, n_contracted)
     labels, iterations, converged = _label_propagation(
         edges, max_iterations, checkpoint_every
     )
-    _log_path("loop", raw_overflow, contracted_edges, iterations, converged)
+    _log_path(
+        "loop", raw_overflow, contracted_edges, iterations, converged,
+        loop_edges,
+    )
     if not converged:
         raise RuntimeError(
             f"connected_components did not converge within max_iterations="

@@ -488,7 +488,9 @@ def bfs_distances(
     (frontier ⨝ edges) + distinct + one anti-join against the visited
     set. Per-hop state is localCheckpointed eagerly — the repo's
     landmine #1: without it hop h's lineage contains h nested joins
-    and Spark re-executes the whole prefix every iteration — and the
+    and Spark re-executes the whole prefix every iteration. Each
+    checkpoint is released as soon as the next hop's is materialized,
+    so only the returned frame stays registered. The
     loop exits early on an empty frontier (one tiny count per hop;
     driver-side, but O(max_hops) scalar actions, not per-row). The
     frontier and visited tables carry ONE row per node — executor
@@ -519,7 +521,8 @@ def bfs_distances(
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     parts = max(1, min(int(old_sp), m // 100_000 + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    sym = None
+    sym = visited = frontier = None
+    done = False
     try:
         sym = sym0.repartition(parts, "a").persist()
         visited = spark.createDataFrame(
@@ -532,20 +535,39 @@ def bfs_distances(
                 .select(F.col("b").alias("node"))
                 .distinct()
             )
-            frontier = (
+            nxt = (
                 reached.join(visited, "node", "left_anti")
                 .select("node", F.lit(hop).cast("bigint").alias("dist"))
                 .localCheckpoint(eager=True)
             )
+            if frontier is not visited:
+                _release_checkpoint(frontier)
+            frontier = nxt
             if frontier.isEmpty():
                 break
+            prev = visited
             visited = visited.union(frontier).localCheckpoint(eager=True)
+            _release_checkpoint(prev)
+        done = True
         return visited
     finally:
+        # every superseded per-hop checkpoint is released above; the last
+        # frontier here, and on failure the visited frame too
         spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+        if frontier is not None and frontier is not visited:
+            _release_checkpoint(frontier)
+        if visited is not None and not done:
+            _release_checkpoint(visited)
         if sym is not None:
             sym.unpersist()
         sym0.unpersist()
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a `localCheckpoint()`ed frame. The frame is
+    not in the cache manager, so `DataFrame.unpersist` does not reach it;
+    left alone it stays registered until the JVM garbage-collects it."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def hits(

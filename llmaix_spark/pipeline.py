@@ -7,7 +7,9 @@ canonicalization are wide, per the north rule):
     ─ assemble (▲ groupBy conv_id — map-side combinable)
     ─ mapInPandas extraction (narrow)
     ─ from_json + explode → triples_raw (narrow)
-    ─ mention distinct + MinHash-LSH (▲ linking)
+    ─ mention distinct + MinHash (▲ linking) → LSH bucket rows
+      (▲ groupBy band; candidate pairs generated inside each bucket, no
+      self-join) → Levenshtein verify → distinct (▲)
     ─ CC (▲ canonicalization): Arrow probe → driver union-find; on
       overflow one hook-contraction round first; label-propagation
       loop (localCheckpoint per round) only if that still overflows
@@ -24,13 +26,13 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from llmaix_spark.functions.text import norm_surface_expr
 from llmaix_spark.operators.canonicalize import canonical_assignments
 from llmaix_spark.operators.extraction import ExtractionConfig, extract_triples
-from llmaix_spark.operators.linking import match_edges
+from llmaix_spark.operators.linking import log_bucket_stats, match_edges
 from llmaix_spark.operators.materialize import load_if_complete, write_stage
 
 
@@ -128,8 +130,9 @@ def run_pipeline_from_triples(
     triples_raw = stage("triples_raw", triples_factory)
 
     def _link():
+        buckets = Observation("lsh_buckets")
         mentions, edges = match_edges(
-            triples_raw, cfg.link_threshold, cfg.shingle_n
+            triples_raw, cfg.link_threshold, cfg.shingle_n, buckets
         )
         # persist: CC + two joins + the stage write all re-consume these
         # and their lineage is the whole LSH DAG. Unpersisted after the
@@ -137,7 +140,11 @@ def run_pipeline_from_triples(
         mentions = mentions.persist()
         edges = edges.persist()
         _to_unpersist.extend([mentions, edges])
-        return canonical_assignments(mentions, edges)
+        assignments = canonical_assignments(mentions, edges)
+        # connected_components' first probe ran the LSH plan, which
+        # filled the observation; a resumed run never gets here
+        log_bucket_stats(buckets)
+        return assignments
 
     assignments = stage("assignments", _link)
 

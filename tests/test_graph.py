@@ -189,6 +189,8 @@ def test_pagerank_failure_mid_loop_releases_cache(spark, monkeypatch):
 
 
 def test_bfs_failure_mid_loop_releases_cache(spark, monkeypatch):
+    """A failing hop leaves no persisted frame or checkpoint behind, and a
+    successful call leaves only the returned frame's checkpoint."""
     from pyspark import StorageLevel
 
     from llmaix_spark.operators.graph import bfs_distances
@@ -197,6 +199,7 @@ def test_bfs_failure_mid_loop_releases_cache(spark, monkeypatch):
         [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
     )
     cls = type(edges)
+    before = _persistent_rdd_ids(spark)
     persisted = _record_persists(monkeypatch, cls)
     _fail_on_call(monkeypatch, cls, "isEmpty", 2)  # the second hop
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -204,3 +207,12 @@ def test_bfs_failure_mid_loop_releases_cache(spark, monkeypatch):
     monkeypatch.undo()
     assert len(persisted) == 2  # sym0, sym
     assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    assert _persistent_rdd_ids(spark) - before == set()
+    # a successful 3-hop call keeps only the returned frame's checkpoint:
+    # every superseded frontier/visited one is released
+    out = bfs_distances(edges, max_hops=3)
+    kept = out._jdf.queryExecution().analyzed().rdd().id()
+    assert _persistent_rdd_ids(spark) - before == {kept}
+    assert sorted(map(tuple, out.collect())) == [
+        ("a", 0), ("b", 1), ("c", 2), ("d", 3)
+    ]

@@ -1,6 +1,7 @@
 """Linking (MinHash-LSH + verify) and CC canonicalization unit tests."""
 
 import logging
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +13,9 @@ from llmaix_spark.operators.canonicalize import (
     salted_count,
 )
 from llmaix_spark.operators.linking import (
+    BANDS,
+    N_HASHES,
+    ROWS,
     match_edges,
     mention_table,
     minhash_signatures,
@@ -64,6 +68,96 @@ def test_lsh_finds_typo_pair_and_verify_rejects_unrelated(spark):
     assert verified == {("soeren zimmermann", "soeren zimmxrmann")}
 
 
+def _banded_reference(rows, max_bucket_size, threshold=90.0):
+    """Pure-Python banded LSH: per band and per bucket of at most
+    max_bucket_size members, every pair a < b that passes the length
+    gate — as a multiset (a pair sharing k buckets counts k times)."""
+    buckets = {}
+    for norm, sig in rows:
+        for b in range(BANDS):
+            key = (b, tuple(sig[b * ROWS:(b + 1) * ROWS]))
+            buckets.setdefault(key, []).append(norm)
+    gap = 1.0 - threshold / 100.0
+    out = Counter()
+    for members in buckets.values():
+        if max_bucket_size and len(members) > max_bucket_size:
+            continue
+        for a in members:
+            for b in members:
+                la, lb = len(a), len(b)
+                if a < b and abs(la - lb) <= gap * max(la, lb):
+                    out[(a, b)] += 1
+    return out
+
+
+def _lsh_fixture(spark):
+    """Signatures of real norms (typo pairs that collide in several bands,
+    norms shorter than the shingle size) plus hand-made rows: a 12-member
+    hub bucket of mixed lengths and a 20-member bucket over a cap of 15."""
+    real = spark.createDataFrame(
+        [(n,) for n in (
+            "soeren zimmermann", "soeren zimmxrmann", "soeren zimmermanx",
+            "acme corporation", "acme corporatixn", "ab", "ba", "abc",
+            "x", "xy",
+        )],
+        ["norm"],
+    )
+    rows = [(r["norm"], list(r["sig"]))
+            for r in minhash_signatures(real).collect()]
+
+    def sig(i, shared):
+        out = [10**9 + 100 * i + j for j in range(N_HASHES)]
+        for band, value in shared.items():
+            out[band * ROWS:(band + 1) * ROWS] = [value] * ROWS
+        return out
+
+    # hub: band 0 shared by 12 norms of lengths 9..14 (the gate drops some);
+    # the first four also share band 1 (several collisions per pair)
+    for i in range(12):
+        rows.append((f"hub{i:02d}" + "h" * (4 + i // 2),
+                     sig(i, {0: 7, 1: 8} if i < 4 else {0: 7})))
+    # over the cap: band 2 shared by 20 equal-length norms; two of them
+    # also share the selective band 3, so that pair survives the cap
+    for i in range(20):
+        rows.append((f"cap{i:02d}xx", sig(100 + i, {2: 9, 3: 11} if i < 2
+                                          else {2: 9})))
+    return rows
+
+
+def test_lsh_candidates_match_banded_reference(spark):
+    """The candidate multiset equals the pure-Python banded reference,
+    with and without the bucket cap."""
+    rows = _lsh_fixture(spark)
+    sigs = spark.createDataFrame(rows, "norm string, sig array<bigint>")
+    for cap in (15, None):
+        got = Counter(
+            (r["norm_a"], r["norm_b"])
+            for r in lsh_candidate_pairs(sigs, cap).collect()
+        )
+        want = _banded_reference(rows, cap)
+        assert got == want, cap
+        # the fixture exercises what it claims to
+        assert max(want.values()) >= 2  # multi-band collisions
+        assert ("cap00xx", "cap01xx") in want
+        assert (("cap02xx", "cap03xx") in want) == (cap is None)
+        assert ("soeren zimmermann", "soeren zimmxrmann") in want
+
+
+def test_match_edges_plan_has_no_join(spark):
+    """Candidates come from inside the bucket rows: the optimized plan of
+    the match edges has no join, so levenshtein cannot be pushed into a
+    join condition ahead of the cheap gates."""
+    t = _triples(
+        spark, [("c1", "Anna Müller", "knows", "Anna Mxller")]
+    )
+    _, edges = match_edges(t)
+    plan = edges._jdf.queryExecution().optimizedPlan().treeString()
+    nodes = [line.lstrip(" :+-|") for line in plan.splitlines()]
+    joins = [n for n in nodes if n.startswith("Join")]
+    assert not any("levenshtein" in n for n in joins), plan
+    assert joins == [], plan
+
+
 def test_verify_threshold_boundary(spark):
     # 1 edit / 10 chars = ratio 90.0 → kept; 1 edit / 5 chars = 80 → dropped
     pairs = spark.createDataFrame(
@@ -102,22 +196,29 @@ def test_connected_components_iterative_path(spark):
     assert it["e"] == "a" and it["n"] == "m" and it["y"] == "x"
 
 
-def test_connected_components_long_chain_pointer_doubling(spark):
+def test_connected_components_long_chain_pointer_doubling(spark, caplog):
     """A 40-node chain has diameter 39 — plain 1-hop propagation needs 39
     rounds; the pointer-doubling shortcut must converge well inside 10
-    (not converging raises)."""
+    (not converging raises). Both probes overflow a threshold of 10, and
+    hooking grows the chain (39 edges contract to about 77), so the loop
+    runs on the 39 raw edges."""
     nodes = [f"n{i:03d}" for i in range(40)]
     edges = spark.createDataFrame(
         list(zip(nodes[:-1], nodes[1:])), ["norm_a", "norm_b"]
     )
-    got = {
-        r["norm"]: r["component"]
-        for r in connected_components(
-            edges, max_iterations=10, driver_threshold=0
-        ).collect()
-    }
+    with caplog.at_level(
+        logging.INFO, logger="llmaix_spark.operators.canonicalize"
+    ):
+        got = {
+            r["norm"]: r["component"]
+            for r in connected_components(
+                edges, max_iterations=10, driver_threshold=10
+            ).collect()
+        }
     assert set(got.values()) == {"n000"}
     assert len(got) == 40
+    (msg,) = [r.getMessage() for r in caplog.records]
+    assert "path=loop raw_overflow=True" in msg and "loop_edges=39" in msg
 
 
 def test_connected_components_raises_when_iteration_capped(spark):

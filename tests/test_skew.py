@@ -1,6 +1,8 @@
 """Adversarial skew: one entity dominating the corpus must not break or
 mis-canonicalize the pipeline (north-rule hot-entity handling)."""
 
+import logging
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -8,7 +10,7 @@ from llmaix_spark.operators.canonicalize import salted_count
 from llmaix_spark.pipeline import PipelineConfig, canonical_triples, run_pipeline
 
 
-def test_pipeline_under_extreme_skew(spark):
+def test_pipeline_under_extreme_skew(spark, caplog):
     """95% of turns mention the same entity (with surface variants)."""
     hot = [
         ("c%05d" % i, 0, "user",
@@ -28,7 +30,11 @@ def test_pipeline_under_extreme_skew(spark):
         hot + cold,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     ).repartition(8)
-    res = run_pipeline(spark, df, PipelineConfig(num_partitions=8))
+    with caplog.at_level(logging.INFO, logger="llmaix_spark.operators.linking"):
+        res = run_pipeline(spark, df, PipelineConfig(num_partitions=8))
+    # the bucket stats are filled by the linking stage's own actions
+    assert [r.getMessage() for r in caplog.records if r.levelno == logging.INFO
+            ][-1].startswith("lsh_candidate_pairs skipped_buckets=0 ")
     triples = canonical_triples(res["edges"])
     subs = {r["subj"] for r in triples.select("subj").distinct().collect()}
     # the hot entity's variants all collapse into one canonical subject
@@ -126,15 +132,18 @@ def test_knn_capped_join_equals_exact_on_degenerate_buckets(spark):
     assert capped == exact
 
 
-def test_lsh_band_cap_skips_the_hot_bucket(spark):
+def test_lsh_band_cap_skips_the_hot_bucket(spark, caplog):
     """One band shared by every norm (the low-information-band
-    pathology): with max_bucket_size the O(|bucket|²) self-join inside
+    pathology): with max_bucket_size the O(|bucket|²) pairs inside
     the hot band must be SKIPPED, not materialized — pair count drops
-    to the selective-band pairs only."""
+    to the selective-band pairs only — and the skip is counted."""
+    from pyspark.sql import Observation
+
     from llmaix_spark.operators.linking import (
         BANDS,
         N_HASHES,
         ROWS,
+        log_bucket_stats,
         lsh_candidate_pairs,
     )
 
@@ -151,13 +160,23 @@ def test_lsh_band_cap_skips_the_hot_bucket(spark):
     rows.append(("norm_pair_b", [7] * ROWS + [5] * ROWS
                  + [2 * 10**6 + j for j in range(2 * ROWS, N_HASHES)]))
     sigs = spark.createDataFrame(rows, "norm string, sig array<bigint>")
-    capped = lsh_candidate_pairs(sigs, max_bucket_size=100).collect()
+    buckets = Observation("buckets")
+    capped = lsh_candidate_pairs(
+        sigs, max_bucket_size=100, observation=buckets
+    ).collect()
     # only the selective-band pair survives; the hot band contributes 0
     assert {(r["norm_a"], r["norm_b"]) for r in capped} == {
         ("norm_pair_a", "norm_pair_b")
     }
+    with caplog.at_level(logging.INFO, logger="llmaix_spark.operators.linking"):
+        log_bucket_stats(buckets)
+    (rec,) = caplog.records
+    assert rec.levelno == logging.WARNING
+    assert rec.getMessage().endswith(
+        f"skipped_buckets=1 largest_bucket={n + 2}"
+    )
     uncapped = lsh_candidate_pairs(sigs, max_bucket_size=None)
-    # all-pairs blowup inside the hot band, minus the in-join length
+    # all-pairs blowup inside the hot band, minus the length
     # gate (the 11-char norm_pair_* rows can't pair with 8-char norms);
     # distinct() — multi-band collisions collapse downstream, in verify
     assert uncapped.distinct().count() == n * (n - 1) // 2 + 1
